@@ -22,7 +22,11 @@ from adtl_spark.sources.io import (
     write_parquet,
 )
 from adtl_spark.spec import CompiledSpec, StrDict
-from adtl_spark.validate import annotate_validation, validation_report
+from adtl_spark.validate import (
+    add_report_entry,
+    annotate_validation,
+    validation_report,
+)
 
 
 def load_custom_transformations(filepath: str | Path) -> dict[str, Callable]:
@@ -69,6 +73,8 @@ class Parser:
         self.data: dict[str, DataFrame] = {}
         self.report: dict[str, Any] = {}
         self.report_available = False
+        # adtl_error histogram per table, taken from the CSV sink's collect
+        self._sink_histograms: dict[str, dict[str | None, int]] = {}
 
     # ------------------------------------------------------------------ parse
 
@@ -109,6 +115,8 @@ class Parser:
             }
         self.data = tables
         self.report_available = not skip_validation
+        self.report = {}
+        self._sink_histograms = {}
         return self
 
     # ------------------------------------------------------------------ sinks
@@ -136,7 +144,13 @@ class Parser:
     def write_csv(self, table: str, output: str | None = None) -> str | None:
         df = self.table(table)
         ordered = self._output_columns(table, df)
-        return write_csv_single(df.select(*ordered), output)
+        text, pdf = write_csv_single(df.select(*ordered), output)
+        if "adtl_valid" in pdf.columns:
+            errors = pdf["adtl_error"]
+            histogram: dict[str | None, int] = errors.value_counts().to_dict()
+            histogram[None] = int(errors.isna().sum())
+            self._sink_histograms[table] = histogram
+        return text
 
     def write_parquet(
         self,
@@ -210,7 +224,24 @@ class Parser:
     # ----------------------------------------------------------------- report
 
     def build_report(self) -> dict[str, Any]:
-        self.report = validation_report(self.data)
+        """Validation counters per table, computed once per parse.  Tables
+        already written by the CSV sink are counted from the rows it
+        collected, with no Spark job; the others take one aggregation each
+        (``validation_report``)."""
+        if not self.report:
+            pending = {
+                name: df
+                for name, df in self.data.items()
+                if name not in self._sink_histograms
+            }
+            report = validation_report(pending)
+            for name, histogram in self._sink_histograms.items():
+                add_report_entry(report, name, histogram)
+            rank = {name: i for i, name in enumerate(self.data)}
+            self.report = {
+                key: dict(sorted(entries.items(), key=lambda kv: rank[kv[0]]))
+                for key, entries in report.items()
+            }
         return self.report
 
     def show_report(self) -> None:
@@ -227,7 +258,7 @@ class Parser:
             if not errors:
                 continue
             print(f"\n## {table}\n")
-            for message, count in sorted(errors.items(), key=lambda kv: -kv[1]):
+            for message, count in errors.items():  # (-count, message) order
                 print(f"* {count}: {message}")
 
     # ------------------------------------------------------------------ check

@@ -123,10 +123,14 @@ def cut(df):
     """Cut ``df``'s lineage eagerly: ``localCheckpoint()`` by default,
     reliable ``checkpoint()`` when RELIABLE_CKPT_CONF is true (see the
     conf comment above for the fault-tolerance trade)."""
-    if (
-        df.sparkSession.conf.get(RELIABLE_CKPT_CONF, "false").lower()
-        == "true"
-    ):
+    spark = df.sparkSession
+    if spark.conf.get(RELIABLE_CKPT_CONF, "false").lower() == "true":
+        if not spark.sparkContext.getCheckpointDir():
+            raise ValueError(
+                f"{RELIABLE_CKPT_CONF} is true but the SparkContext has no "
+                "checkpoint directory: call "
+                "spark.sparkContext.setCheckpointDir(<durable path>) first"
+            )
         return df.checkpoint()
     return df.localCheckpoint()
 

@@ -14,7 +14,7 @@ for bit-compat with the reference's csv.DictWriter output
 from __future__ import annotations
 
 import io as _io
-from typing import Iterable
+from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -22,6 +22,9 @@ from pyspark.sql import types as T
 
 from adtl_spark.functions import render as R
 from adtl_spark.spec import StrDict
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 def read_csv_source(
@@ -124,19 +127,25 @@ def write_csv_distributed(df: DataFrame, path: str) -> None:
     _csv_render(df).write.option("header", True).mode("overwrite").csv(path)
 
 
-def write_csv_single(df: DataFrame, output: str | None = None) -> str | None:
+def write_csv_single(
+    df: DataFrame, output: str | None = None
+) -> tuple[str | None, pd.DataFrame]:
     """S6 bit-compat: one CSV with the reference's header ordering
     (validation columns first, then sorted field names).  Driver-side —
-    intended for the golden-test scale, not 100 TB outputs."""
+    intended for the golden-test scale, not 100 TB outputs.
+
+    Returns the CSV text (None when written to ``output``) and the rendered
+    frame it collected, so the caller can derive counters without another
+    Spark job."""
     pdf = _csv_render(df).toPandas()
     buf = _io.StringIO()
     pdf.to_csv(buf, index=False, lineterminator="\r\n")
     text = buf.getvalue()
     if output is None:
-        return text
+        return text, pdf
     with open(output, "w", newline="") as fp:
         fp.write(text)
-    return None
+    return None, pdf
 
 
 def write_parquet(

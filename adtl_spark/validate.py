@@ -316,22 +316,23 @@ def _property_checks(
 
     checks = _keyword_checks(col, is_arr, prop, f"data.{attr}")
     checks += _combinator_checks(col, is_arr, prop, f"data.{attr}")
-    return [(present & F.coalesce(cond, F.lit(False)), msg) for cond, msg in checks]
+    # a null condition is "not violated": _first_error's when() skips it
+    return [(present & cond, msg) for cond, msg in checks]
 
 
 def _subschema_violations(
-    schema: StrDict, df: DataFrame, array_cols: set[str]
+    schema: StrDict, columns: list[str], array_cols: set[str]
 ) -> list[tuple[Column, str]]:
     checks: list[tuple[Column, str]] = []
     for req in schema.get("required", []):
-        if req in df.columns:
+        if req in columns:
             cond = F.col(req).isNull()
         else:
             cond = F.lit(True)
         checks.append((cond, f"data must contain ['{req}'] properties"))
     for attr, prop in schema.get("properties", {}).items():
         if isinstance(prop, dict):
-            checks.extend(_property_checks(attr, prop, df.columns, array_cols))
+            checks.extend(_property_checks(attr, prop, columns, array_cols))
     return checks
 
 
@@ -369,39 +370,48 @@ def annotate_validation(
     schema = spec.schemas.get(table)
     if schema is None:
         return df
-    array_cols = {
-        f.name for f in df.schema.fields if f.dataType.typeName() == "array"
-    }
+    # one schema round trip: df.columns is a JVM call, and a wide schema
+    # would otherwise pay it once per property
+    fields = df.schema.fields
+    columns = [f.name for f in fields]
+    array_cols = {f.name for f in fields if f.dataType.typeName() == "array"}
 
     meta = spec.tables[table]
     if meta.get("kind") == "oneToMany" and meta.get("discriminator") and "oneOf" in schema:
         expanded = _discriminator_subschemas(schema, meta["discriminator"])
         if expanded is not None:
             disc_col = F.col(meta["discriminator"])
-            error: Column = F.lit(None).cast("string")
-            # build per-discriminator error expressions, innermost last
-            for key, sub in expanded.items():
-                sub_err = _first_error(_subschema_violations(sub, df, array_cols))
-                error = F.when(disc_col == F.lit(key), sub_err).otherwise(error)
-            known = F.lit(None).cast("string")
+            # one flat CASE over the (distinct) discriminator keys; a null
+            # or unknown discriminator falls through to the otherwise
+            branches = [
+                (
+                    disc_col == F.lit(key),
+                    _first_error(_subschema_violations(sub, columns, array_cols)),
+                )
+                for key, sub in expanded.items()
+            ]
+            error = F.when(*branches[0])
+            for cond, sub_err in branches[1:]:
+                error = error.when(cond, sub_err)
             unknown_msg = F.concat(
                 F.lit("No validator found for attribute '"),
                 F.coalesce(disc_col, F.lit("None")),
                 F.lit(f"' in table '{table}'"),
             )
-            is_known = disc_col.isin(*expanded.keys())
-            error = F.when(is_known, error).otherwise(unknown_msg)
-            return _attach(df, error)
+            return _attach(df, error.otherwise(unknown_msg))
 
-    error = _first_error(_subschema_violations(schema, df, array_cols))
+    error = _first_error(_subschema_violations(schema, columns, array_cols))
     return _attach(df, error)
 
 
 def _first_error(checks: list[tuple[Column, str]]) -> Column:
-    error: Column = F.lit(None).cast("string")
-    for cond, msg in reversed(checks):
-        error = F.when(cond, F.lit(msg)).otherwise(error)
-    return error
+    """Message of the first violated check, null when none is.  A flat
+    ``coalesce`` keeps the expression tree one level deep however many
+    checks a schema has (a nested CASE per check overflows the JVM stack
+    at a few hundred)."""
+    if not checks:
+        return F.lit(None).cast("string")
+    return F.coalesce(*[F.when(cond, msg) for cond, msg in checks])
 
 
 def _attach(df: DataFrame, error: Column) -> DataFrame:
@@ -413,25 +423,29 @@ def _attach(df: DataFrame, error: Column) -> DataFrame:
     )
 
 
+def add_report_entry(
+    report: dict[str, Any], table: str, histogram: dict[str | None, int]
+) -> None:
+    """Record one table's counters from its ``adtl_error`` histogram (row
+    count per message, ``None`` counting the valid rows).  Errors are kept
+    in ``(-count, message)`` order, so printing and JSON are deterministic."""
+    errors = sorted(
+        ((msg, int(n)) for msg, n in histogram.items() if msg is not None),
+        key=lambda e: (-e[1], e[0]),
+    )
+    report["total"][table] = int(sum(histogram.values()))
+    report["total_valid"][table] = int(histogram.get(None, 0))
+    report["validation_errors"][table] = dict(errors)
+
+
 def validation_report(tables: dict[str, DataFrame]) -> dict[str, Any]:
     """S9 validation counters: totals + error histogram per table
-    (reference: parser.py:845-863, cli.py:78-90) — computed as aggregations,
-    not a second row-wise pass."""
+    (reference: parser.py:845-863, cli.py:78-90) — one ``adtl_error``
+    aggregation per validated table, not a second row-wise pass."""
     report: dict[str, Any] = {"total": {}, "total_valid": {}, "validation_errors": {}}
     for name, df in tables.items():
         if "adtl_valid" not in df.columns:
             continue
-        counts = df.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.col("adtl_valid").cast("int")).alias("valid"),
-        ).collect()[0]
-        report["total"][name] = counts["total"]
-        report["total_valid"][name] = counts["valid"] or 0
-        errors = (
-            df.filter(F.col("adtl_error").isNotNull())
-            .groupBy("adtl_error")
-            .count()
-            .collect()
-        )
-        report["validation_errors"][name] = {r["adtl_error"]: r["count"] for r in errors}
+        rows = df.groupBy("adtl_error").count().collect()
+        add_report_entry(report, name, {r["adtl_error"]: r["count"] for r in rows})
     return report

@@ -5,6 +5,7 @@ fieldnames and coercion."""
 import json
 
 from adtl_spark.api import Parser
+from adtl_spark.validate import validation_report
 
 
 def obs_schema(tmp_path, extra_props=None):
@@ -236,3 +237,145 @@ def test_validation_report(spark, tmp_path):
     assert report["total"]["obs"] == 2
     assert report["total_valid"]["obs"] == 1
     assert sum(report["validation_errors"]["obs"].values()) == 1
+
+
+def _report_parser(spark, tmp_path):
+    """groupBy subject table and discriminated oneToMany obs table, both
+    validated, plus an unvalidated constant table.  Ties in the error
+    counts and an undeclared discriminator value are included."""
+    subject_schema = {
+        "properties": {
+            "subject_id": {"type": "string"},
+            "age": {"type": "integer", "minimum": 0, "maximum": 120},
+            "sex": {"enum": ["male", "female"]},
+        },
+        "required": ["subject_id", "sex"],
+    }
+    (tmp_path / "subject.schema.json").write_text(json.dumps(subject_schema))
+    spec = {
+        "adtl": {
+            "name": "r",
+            "description": "",
+            "tables": {
+                "subject": {
+                    "kind": "groupBy",
+                    "groupBy": "subject_id",
+                    "aggregation": "lastNotNull",
+                    "schema": str(tmp_path / "subject.schema.json"),
+                },
+                "obs": {
+                    "kind": "oneToMany",
+                    "schema": obs_schema(tmp_path),
+                    "discriminator": "name",
+                },
+                "meta": {"kind": "constant"},
+            },
+        },
+        "subject": {
+            "subject_id": {"field": "sid"},
+            "age": {"field": "age"},
+            "sex": {"field": "sex", "values": {"1": "male", "2": "female", "3": "other"}},
+        },
+        "obs": [
+            {
+                "name": "cough",
+                "phase": {"field": "ph"},
+                "is_present": {"field": "cough", "values": {"1": True, "0": False}},
+            },
+            {
+                "name": "oxygen",
+                "phase": "admission",
+                "value": {"field": "oxy"},
+                "if": {"oxy": {"!=": ""}},
+            },
+            {"name": "headache", "phase": "admission", "if": {"cough": "1"}},
+        ],
+        "meta": {"dataset": "report-fixture"},
+    }
+    return Parser(spec, spark=spark)
+
+
+REPORT_ROWS = [
+    {"sid": "S1", "age": "34", "sex": "1", "cough": "1", "ph": "followup", "oxy": "95"},
+    {"sid": "S1", "age": "35", "sex": "1", "cough": "0", "ph": "bad", "oxy": ""},
+    {"sid": "S2", "age": "130", "sex": "2", "cough": "0", "ph": "admission", "oxy": "x"},
+    {"sid": "S3", "age": "40", "sex": "3", "cough": "1", "ph": "later", "oxy": "97"},
+    {"sid": "S4", "age": "-1", "sex": "", "cough": "", "ph": "", "oxy": ""},
+]
+
+
+def _jobs_during(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted under a private job group."""
+    sc = spark.sparkContext
+    group = f"report-jobs-{id(fn)}"
+    sc.setJobGroup(group, "report job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sink_report_equals_validation_report(spark, tmp_path, capsys):
+    """After a CSV save the report is counted from the rows the sink
+    collected: building, printing and rebuilding it launch no Spark job,
+    and it equals the aggregation-built report, error histograms
+    included, in spec table order, with plain-int counts."""
+    p = _report_parser(spark, tmp_path).parse_rows(REPORT_ROWS)
+    p.save(str(tmp_path / "out"), format="csv")
+
+    def report_twice():
+        p.build_report()
+        p.show_report()
+        p.build_report()
+
+    assert _jobs_during(spark, report_twice) == 0
+    report = p.build_report()
+    assert report == validation_report(p.data)
+    assert list(report["total"]) == ["subject", "obs"]
+    assert report["total"] == {"subject": 4, "obs": 9}
+    assert report["total_valid"] == {"subject": 1, "obs": 4}
+    assert sum(report["validation_errors"]["obs"].values()) == 5
+    assert (
+        report["validation_errors"]["obs"]["No validator found for attribute "
+        "'headache' in table 'obs'"] == 2
+    )
+    json.dumps(report)  # no numpy scalars
+    for errors in report["validation_errors"].values():
+        counts = list(errors.items())
+        assert counts == sorted(counts, key=lambda e: (-e[1], e[0]))
+    printed = capsys.readouterr().out
+    assert "|subject       \t|1\t|4\t|25.000000% |" in printed
+    # the three single subject errors tie, and print in message order
+    subject_block = printed.split("## subject")[1].split("##")[0]
+    lines = [line for line in subject_block.splitlines() if line.startswith("* ")]
+    assert lines == [f"* 1: {m}" for m in sorted(report["validation_errors"]["subject"])]
+    assert len(lines) == 3
+
+
+def test_report_after_parquet_save_one_query_per_table(spark, tmp_path):
+    """Without the CSV sink each validated table costs exactly one
+    aggregation: no more jobs than one ``groupBy(adtl_error)`` per table,
+    and none once the report is cached."""
+    p = _report_parser(spark, tmp_path).parse_rows(REPORT_ROWS)
+    p.save(str(tmp_path / "out"), format="parquet")
+    report_jobs = _jobs_during(spark, p.build_report)
+    one_query_each = _jobs_during(
+        spark,
+        lambda: [
+            p.data[t].groupBy("adtl_error").count().collect() for t in ("subject", "obs")
+        ],
+    )
+    assert 0 < report_jobs <= one_query_each
+    assert _jobs_during(spark, p.build_report) == 0
+
+
+def test_new_parse_invalidates_cached_report(spark, tmp_path):
+    p = _report_parser(spark, tmp_path).parse_rows(REPORT_ROWS)
+    p.save(str(tmp_path / "a"), format="csv")
+    assert p.build_report()["total"] == {"subject": 4, "obs": 9}
+    p.parse_rows(REPORT_ROWS[:1])
+    p.save(str(tmp_path / "b"), format="csv")
+    assert p.build_report()["total"] == {"subject": 1, "obs": 3}

@@ -171,3 +171,28 @@ def test_pagerank_isolated_vertex_gets_base_rank(spark):
     rows = {r["v"]: r["pagerank"] for r in pagerank(edges, vertices, 2).collect()}
     assert set(rows) == {1, 2, 7}
     assert rows[7] == pytest.approx(0.15)
+
+
+def test_cut_reliable_without_checkpoint_dir_names_the_conf(spark, monkeypatch):
+    """Under the reliable conf with no checkpoint dir, cut fails up front
+    with an error naming the conf and the fix; the default path never
+    asks for the checkpoint dir."""
+    df = spark.range(3)
+
+    def no_dir():
+        return None
+
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", no_dir)
+    try:
+        spark.conf.set(RELIABLE_CKPT_CONF, "true")
+        with pytest.raises(ValueError, match=RELIABLE_CKPT_CONF) as err:
+            cut(df)
+        assert "setCheckpointDir" in str(err.value)
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
+
+    def unexpected():
+        raise AssertionError("default cut must not read the checkpoint dir")
+
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", unexpected)
+    assert cut(df).count() == 3

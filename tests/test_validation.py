@@ -127,3 +127,48 @@ def test_validation_counts_and_messages(spark, tmp_path):
     errs = {e for ok, e in got if not ok}
     assert "data.age must be bigger than or equal to 0" in errs
     assert "data.age must be smaller than or equal to 120" in errs
+
+
+def test_wide_schema_annotates_without_stack_overflow(spark, tmp_path):
+    """600 checks (300 integer/minimum properties) stay one flat
+    first-violation expression: annotation plans and collects, and the
+    first violated property in schema order names the error.  The
+    annotation runs on a source-shaped frame directly, since rule
+    compilation is not under test here."""
+    from adtl_spark.spec import CompiledSpec
+    from adtl_spark.validate import annotate_validation
+
+    attrs = [f"c{i:03d}" for i in range(300)]
+    schema = {"properties": {a: {"type": "integer", "minimum": 0} for a in attrs}}
+    (tmp_path / "s.json").write_text(json.dumps(schema))
+    spec = CompiledSpec(
+        {
+            "adtl": {
+                "name": "wide",
+                "description": "",
+                "tables": {"t": {"kind": "oneToOne", "schema": str(tmp_path / "s.json")}},
+            },
+            "t": {a: {"field": a} for a in attrs},
+        }
+    )
+    ok = {a: "1" for a in attrs}
+    rows = [
+        ("ok", ok),
+        ("min", {**ok, "c007": "-1", "c250": "x"}),
+        ("type", {**ok, "c299": "1.5"}),
+    ]
+    df = spark.createDataFrame(
+        [(key, *(r[a] for a in attrs)) for key, r in rows],
+        ", ".join(["key string"] + [f"{a} string" for a in attrs]),
+    )
+    got = {
+        r["key"]: (r["adtl_valid"], r["adtl_error"])
+        for r in annotate_validation(spec, "t", df)
+        .select("key", "adtl_valid", "adtl_error")
+        .collect()
+    }
+    assert got == {
+        "ok": (True, None),
+        "min": (False, "data.c007 must be bigger than or equal to 0"),
+        "type": (False, "data.c299 must be integer"),
+    }
