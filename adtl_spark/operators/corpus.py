@@ -48,6 +48,7 @@ from adtl_spark.operators.dedup import (
     shingle_df,
 )
 from adtl_spark.operators.text import tokens
+from adtl_spark.session import cut
 
 
 def contamination_hits(
@@ -597,8 +598,6 @@ def bigram_logprob(
     # pair-TYPE table (r14 — see kn_bigram_logprob for the argument):
     # aggregating the raw stream separately per consumer re-executed
     # the tokenize+explode pipeline once per broadcast build.
-    from adtl_spark.session import cut
-
     bcounts = cut(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt2"))
     )
@@ -861,8 +860,6 @@ def kn_bigram_logprob(
     # type table; the raw stream is now scanned exactly twice (type
     # counts + the per-doc scoring pass).  Counts are exact integers
     # either way; the oracle is unchanged and stays bit-identical.
-    from adtl_spark.session import cut
-
     bcounts = cut(
         pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("cnt2"))
     )

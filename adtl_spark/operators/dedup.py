@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from adtl_spark.operators.graph import _gated_broadcast
+from adtl_spark.session import cut
 
 # deterministic 31-bit modulus for minhash permutations (fits multiplication
 # by 31-bit coefficients inside int64)
@@ -63,7 +64,7 @@ def minhash_coefficients(k: int, seed: int = 7) -> list[tuple[int, int]]:
 
 
 def _materialize_and_release(result: DataFrame, caches: list[DataFrame]) -> DataFrame:
-    """Materialize ``result`` (localCheckpoint cuts its lineage off the
+    """Materialize ``result`` (session.cut cuts its lineage off the
     cached intermediates), then unpersist the intermediates.
 
     persist() without a matching unpersist leaks executor memory across
@@ -75,8 +76,6 @@ def _materialize_and_release(result: DataFrame, caches: list[DataFrame]) -> Data
     The cut is session.cut: executor-local checkpoint by default,
     reliable checkpoint under spark.adtl.reliableCheckpoint (r14) —
     local blocks are NOT fault-tolerant, see session.RELIABLE_CKPT_CONF."""
-    from adtl_spark.session import cut
-
     out = cut(result)
     for c in caches:
         c.unpersist()
@@ -852,7 +851,7 @@ def simhash_components(
     """
     # one eager cut: the tokenize+48-bit-vote pipeline computes once and
     # feeds the signature aggregation AND the final doc-level join
-    sig = simhash(df, text_col=text_col, id_col=id_col).localCheckpoint()
+    sig = cut(simhash(df, text_col=text_col, id_col=id_col))
     usig = sig.groupBy("simhash").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("doc_id").alias("min_id")
     )
@@ -915,7 +914,6 @@ def cluster_pairs(
     max_iterations: int = 20,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over a near-duplicate pair list: every member
     labeled with the smallest id in its component (the canonical doc).
@@ -924,9 +922,9 @@ def cluster_pairs(
     smallest label among itself and its neighbors — and (b) pointer
     jumping — ``label(x) <- label(label(x))`` — so the effective radius
     roughly doubles per round and a component of diameter d converges in
-    O(log d) shuffles, not O(d).  Intermediate label tables are
-    checkpointed: iterative plans otherwise grow lineage (and codegen)
-    exponentially.
+    O(log d) shuffles, not O(d).  Intermediate label tables are cut
+    (session.cut, reliable under spark.adtl.reliableCheckpoint):
+    iterative plans otherwise grow lineage (and codegen) exponentially.
 
     FUSED ROUND (r14 optimization round, guide §2.1/§2.4): adoption's
     own-label term rides the edge relation as a SELF-LOOP row per node
@@ -943,28 +941,8 @@ def cluster_pairs(
     loop fell from 3.2 s / 5 rounds x (3 joins, 2 edge scans) to
     1.6-2.1 s / 6 rounds x (1 join + 1 edge scan), output bit-identical.
 
-    ``checkpoint_dir`` selects the cut strategy.  Default (None) uses
-    ``localCheckpoint`` — blocks live on executors, fastest, but an
-    executor loss mid-iteration kills the job.  Passing a directory (HDFS/
-    object store on a real cluster) switches to reliable ``checkpoint()``:
-    every iteration's labels survive executor loss, the right default for
-    multi-hour 100 TB runs.
-
     Returns (doc_id, canonical_id) for every node appearing in ``pairs``.
     """
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def cut(df: DataFrame) -> DataFrame:
-            return df.checkpoint()
-
-    else:
-        # session.cut: localCheckpoint by default, reliable checkpoint
-        # under spark.adtl.reliableCheckpoint (r14) — same switch the
-        # explicit checkpoint_dir parameter has always offered, now
-        # reachable session-wide without threading the parameter
-        from adtl_spark.session import cut
-
     # checkpointed: every iteration joins against edges — without cutting
     # lineage here each round would re-execute the whole upstream
     # pair-generation pipeline.  The pair list normalizes to (lo, hi)

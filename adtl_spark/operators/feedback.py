@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut
+
 __all__ = [
     "bradley_terry",
     "winrate_wilson",
@@ -114,7 +116,7 @@ def bradley_terry(
         )
         # few iterations, item-sized state: cut the growing lineage so
         # round k+1 doesn't recompute rounds 1..k
-        scores = scores.localCheckpoint(eager=True)
+        scores = cut(scores)
     tot_games = games.groupBy("i").agg(F.sum("n_ij").alias("games"))
     result = (
         scores.join(wins, "i", "left")

@@ -33,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from adtl_spark.session import cut as _cut
+from adtl_spark.session import cut
 
 PR_SCALE = 1_000_000_000
 
@@ -183,7 +183,7 @@ def pagerank(
         ranks = vertices.select(
             F.col("v"), F.lit(PR_SCALE).cast("long").alias("rq")
         )
-        # each iteration ends in an eager localCheckpoint: it truncates the
+        # each iteration ends in an eager session.cut: it truncates the
         # lineage (otherwise the final DAG embeds ew once PER iteration and
         # recomputes it that many times at materialization), keeps the rank
         # vector distributed (never collected), and lets the ew cache be
@@ -210,7 +210,7 @@ def pagerank(
                 )
                 .select(F.col("dst").alias("v"), "rq")
             )
-            ranks = _cut(ranks)
+            ranks = cut(ranks)
         return ranks.select(
             F.col("v"),
             (
@@ -349,7 +349,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             .join(closing, ["a2", "b2"])
             .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
         )
-        return _cut(out)
+        return cut(out)
     finally:
         o.unpersist()
         und.unpersist()
@@ -416,8 +416,8 @@ def label_propagation(
     small), one (dst, label) weight aggregation, then the per-vertex
     argmax as a second HASH aggregation (``max_by`` over the ordered
     struct (s, -label) — highest weight, then smallest label) instead
-    of a rank window, so no per-vertex sort ever runs — with an eager
-    localCheckpoint per iteration to keep the lineage flat.  Everything
+    of a rank window, so no per-vertex sort ever runs — with one eager
+    lineage cut after the loop (the lineage is a chain).  Everything
     is BIGINT arithmetic; the DuckDB oracle unrolls the loop (its
     row_number form encodes the identical (s DESC, label ASC) order)
     and matches exactly.
@@ -431,10 +431,10 @@ def label_propagation(
     # and therefore every sum and argmax — is identical.  What it buys
     # (r13, guide §1.2/§2.2): the label vector now has exactly ONE
     # consumer per iteration (the join), so the lineage is a chain and
-    # the per-iteration eager localCheckpoint — four driver-job
+    # the per-iteration eager cut — four driver-job
     # round-trips whose only purpose was stopping the two-consumer
     # subtree from doubling per level — is replaced by a single eager
-    # checkpoint after the loop (still needed: downstream consumers like
+    # cut after the loop (still needed: downstream consumers like
     # modularity read the labels several times, and the edge cache
     # releases before return).
     # Cached PARTITIONED BY dst (guide §2.1 — remove shuffles outright):
@@ -479,7 +479,7 @@ def label_propagation(
                 )
                 .select(F.col("dst").alias("v"), F.col("lab"))
             )
-        labels = _cut(labels)
+        labels = cut(labels)
         return labels.select(
             "v", F.col("lab").alias("community")
         ).orderBy("community", "v")
@@ -633,7 +633,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
                 .alias("modularity"),
             )
         )
-        return _cut(out)
+        return cut(out)
     finally:
         edges.unpersist()
 

@@ -19,6 +19,8 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from adtl_spark.session import cut
+
 # BPE-ish pre-tokenizer: letter runs, single digits, single punctuation —
 # a cheap stand-in for byte-pair pre-segmentation rules
 BPE_ISH_REGEX = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
@@ -377,25 +379,35 @@ def quality_repetition_keep(
     ``df JOIN quality_ids JOIN repetition_ids`` (r14 optimization round,
     guide §1.2/§2.4): both scorers are narrow per-row expressions, so
     filtering on them directly removes two joins and a second
-    tokenizer/regex pass over the corpus.  Equivalent to the join form
-    whenever doc ids are unique (the corpus PK — the join form would
-    duplicate rows otherwise, which no dedup pipeline wants).  The score
-    expressions are the operators' own builders (_quality_cols /
-    _repetition_staged), so the kept set is decided by bit-identical
-    arithmetic, rounding included."""
+    tokenizer/regex pass over the corpus.  The score expressions are the
+    operators' own builders (_quality_cols / _repetition_staged), so the
+    kept set is decided by bit-identical arithmetic, rounding included.
+
+    Precondition: doc ids are unique (the corpus PK).  Only then is this
+    filter equivalent to the join form, which would duplicate rows of a
+    repeated id.  Any input schema comes back unchanged: the staging
+    columns take names no input column has."""
+    taken = {c.lower() for c in df.columns}
+
+    def fresh(name: str) -> str:
+        while name.lower() in taken:
+            name = "_" + name
+        return name
+
+    toks_c, q_c, bg_c = fresh("__toks"), fresh("__q"), fresh("__bg")
     staged = df.select(
         "*",
-        tokens(F.col(text_col)).alias("__toks"),
+        tokens(F.col(text_col)).alias(toks_c),
     )
-    q = _quality_cols(F.col(text_col), F.col("__toks"))
-    rep = _repetition_staged(F.col(text_col), F.col("__toks"))
+    q = _quality_cols(F.col(text_col), F.col(toks_c))
+    rep = _repetition_staged(F.col(text_col), F.col(toks_c))
     staged2 = staged.select(
-        "*", q["quality"].alias("__q"), rep["__bg"].alias("__bg")
+        "*", q["quality"].alias(q_c), rep["__bg"].alias(bg_c)
     )
     return staged2.filter(
-        (F.col("__q") >= F.lit(quality_min))
+        (F.col(q_c) >= F.lit(quality_min))
         & (
-            _rep_frac(_max_multiplicity(F.col("__bg")), F.size("__bg"))
+            _rep_frac(_max_multiplicity(F.col(bg_c)), F.size(bg_c))
             <= F.lit(top_bigram_max)
         )
     ).select(*df.columns)
@@ -2124,17 +2136,18 @@ def schedule_frontier(
         # usual deterministic-input caveat applies (see apply_robots).
         sc = urls.sparkSession.sparkContext
         bands = int(n_bands) if n_bands else sc.defaultParallelism * 4
-        # localCheckpoint pins the band ids: the ranged relation feeds
+        # a lazy cut pins the band ids: the ranged relation feeds
         # BOTH the count aggregate and the numbering join, and without
         # materialization the range exchange is evaluated twice — AQE
         # may coalesce its partitions differently per evaluation, and
         # spark_partition_id would then disagree between the two
         # consumers (observed: wrong offsets on a 20k-row run).  One
         # bounded materialization of the frontier buys consistency.
-        ranged = (
-            out.repartitionByRange(bands, F.col("host"), *order)
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint(eager=False)
+        ranged = cut(
+            out.repartitionByRange(bands, F.col("host"), *order).withColumn(
+                "__pid", F.spark_partition_id()
+            ),
+            eager=False,
         )
         within = F.row_number().over(
             Window.partitionBy("host", "__pid").orderBy(*order)
@@ -2227,7 +2240,7 @@ def apply_robots(
     assign different ids across attempts and double-count or drop rows
     in the reassembly — the same row-identity contract the engine's
     lastNotNull path documents (plans/tables.py: attach_row_id).
-    Materialize (``df.localCheckpoint()``) a non-deterministic input
+    Materialize (``session.cut(df)``) a non-deterministic input
     before calling."""
     spark = urls.sparkSession
     # RFC 9309 matches against path AND query (the Google matcher's

@@ -35,7 +35,7 @@ from adtl_spark.operators import joins as J
 from adtl_spark.operators import monitor as MO
 from adtl_spark.operators import retrieval as R
 from adtl_spark.operators import text as X
-from adtl_spark.session import configure_for_engine, scan_parallel
+from adtl_spark.session import configure_for_engine, cut, scan_parallel
 
 DEC = "decimal(18,4)"
 
@@ -84,16 +84,14 @@ def _ckpt_order(df: DataFrame, *cols) -> DataFrame:
     full upstream once BEFORE the real pass does — for a Python-codec
     pipeline that doubles the query (measured 2 x 32-task MapInPandas
     stages per execution on the JPEG gates; guide §7.2's duplicated-
-    subtree smell).  ``localCheckpoint`` computes the pipeline once and
+    subtree smell).  ``cut`` computes the pipeline once and
     lets both the sampling and the sort read the materialized blocks.
     Gate-output shaped only: the checkpointed relation is the per-doc
     feature table (rows ~ documents), never payload-sized.  Cut via
     session.cut: reliable checkpoint under
     spark.adtl.reliableCheckpoint (r14 — local blocks are not
     fault-tolerant on a real cluster)."""
-    from adtl_spark.session import cut as _cut
-
-    return _cut(df).orderBy(*cols)
+    return cut(df).orderBy(*cols)
 
 
 def _dec_sum(col, alias: str):
@@ -2182,10 +2180,10 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed: BOTH measured paths grade against the same all-pairs
     # truth — without the cut the quadratic truth join would execute once
     # per measure() call (Spark plans trees, not DAGs)
-    truth = (
-        S.embedding_neardup(emb, tau=NEARDUP_TAU, planes=0)
-        .select("id_a", "id_b", F.lit(1).alias("t"))
-        .localCheckpoint()
+    truth = cut(
+        S.embedding_neardup(emb, tau=NEARDUP_TAU, planes=0).select(
+            "id_a", "id_b", F.lit(1).alias("t")
+        )
     )
 
     def measure(path: str, **kw) -> DataFrame:
@@ -2628,7 +2626,7 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caches — the working corpus and the barrier scan (scan_parallel's
     # barrier mode hands cache ownership to the caller); persists without
     # unpersist accumulate across queries in a long-lived session
-    out = result.localCheckpoint()
+    out = cut(result)
     kept.unpersist()
     docs.unpersist()
     return out
@@ -2804,7 +2802,7 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     claimed here, only recall against the capped truth."""
     docs = _t(spark, sf_dir, "documents")
     # truth and found are INDEPENDENT eagerly-materialized pipelines
-    # (each ends in _materialize_and_release's localCheckpoint), so run
+    # (each ends in _materialize_and_release's cut), so run
     # them from two driver threads (r14, guide §2.6 — overlap
     # independent jobs): the found side's tail back-fills executors the
     # truth side leaves idle.  Results are checkpoint-backed and
@@ -5067,13 +5065,11 @@ def multimodal_dhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1/sf0.01 + the unchanged doc-level oracle.  Before: the band
     # join exploded ~5000 docs over 18 hot hash values into ~1.4M
     # doc-level candidates; after: <= C(18,2) rep candidates.
-    uh = (
-        classed.groupBy("dhash_hi", "dhash_lo")
-        .agg(
+    uh = cut(
+        classed.groupBy("dhash_hi", "dhash_lo").agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.min("media_id").alias("media_id"),
         )
-        .localCheckpoint()
     )
     ph = M.dhash_pairs(
         uh.select("media_id", "dhash_hi", "dhash_lo"), max_hamming=8
@@ -10902,9 +10898,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list, and each releases its own cache — without the cut
     # the full co-occurrence derivation (lineitem distinct + per-order
     # self-join + weight aggregation) would execute twice in this query
-    edges = G.cooccurrence_edges(
-        li, "l_orderkey", "l_suppkey"
-    ).localCheckpoint()
+    edges = cut(G.cooccurrence_edges(li, "l_orderkey", "l_suppkey"))
     vertices = supplier.select(F.col("s_suppkey").alias("v"))
     labels = G.label_propagation(edges, vertices, iters=LPA_ITERS)
     return G.modularity(edges, labels)

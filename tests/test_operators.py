@@ -236,15 +236,23 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_cluster_pairs_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir switches lineage cuts to reliable checkpoint() files
-    (executor-loss-safe on a real cluster) with identical results."""
+    """A checkpoint dir plus spark.adtl.reliableCheckpoint switch the
+    loop's lineage cuts to reliable checkpoint() files (executor-loss-safe
+    on a real cluster) with identical results."""
+    from adtl_spark.session import RELIABLE_CKPT_CONF
+
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"]
     )
-    out = {
-        r["doc_id"]: r["canonical_id"]
-        for r in D.cluster_pairs(pairs, checkpoint_dir=str(tmp_path / "ckpt")).collect()
-    }
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        spark.conf.set(RELIABLE_CKPT_CONF, "true")
+        out = {
+            r["doc_id"]: r["canonical_id"]
+            for r in D.cluster_pairs(pairs).collect()
+        }
+    finally:
+        spark.conf.unset(RELIABLE_CKPT_CONF)
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
     ckpt_files = list((tmp_path / "ckpt").rglob("*"))
     assert ckpt_files  # reliable checkpoints actually hit the directory
@@ -2225,3 +2233,30 @@ def test_semantic_dedup_auto_k_scales_with_corpus(spark):
     }
     assert auto == explicit
     assert len(set(auto.values())) > 1  # actually clustered
+
+
+def test_quality_repetition_keep_ignores_internal_column_names(spark, docs):
+    """Input columns that share the filter's internal staging names do
+    not change the kept rows, and the input schema comes back as is."""
+    clash = docs.select(
+        "*",
+        F.lit(-1.0).alias("__q"),
+        F.lit("x").alias("__TOKS"),
+        F.array().cast("array<string>").alias("__bg"),
+    )
+    want = X.quality_repetition_keep(docs, 0.6, 0.13).collect()
+    got = X.quality_repetition_keep(clash, 0.6, 0.13)
+    assert got.columns == clash.columns
+    assert 0 < len(want) < docs.count()
+    assert sorted(tuple(r) for r in got.select(*docs.columns).collect()) == sorted(
+        tuple(r) for r in want
+    )
+
+
+def test_huffman_overfull_table_raises():
+    """Three one-bit codes cannot exist: the table is rejected by name
+    instead of silently growing the 8-bit peek table."""
+    from adtl_spark.operators.jpeg_lite import _HuffTree
+
+    with pytest.raises(ValueError, match="invalid Huffman table"):
+        _HuffTree([3] + [0] * 15, [0, 1, 2])
